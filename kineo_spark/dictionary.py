@@ -35,11 +35,17 @@ Spark-native version:
 - ``materialize`` joins the dictionary back for exactly the projected
   variables (the MaterializeTermsPlan analog), broadcast when small.
 
-Round-1 scope: the encoding, ID-space BGP joins, and materialization
-are implemented and tested; the main compiler still runs term-space
-(its star-collapsed scans read native parquet directly, which is faster
-for the driver workload since no conversion pass exists). Wiring a full
-ID-mode compile toggle is the designed next step.
+Scope: ``id_compiler`` is the ID-mode compiler — star-collapsed
+native scans hash join-only vars to ids, the remaining patterns run on
+the 4×long ``id_quads`` with lazy materialization, and selective value
+filters run once against the dictionary; 128-bit keys are the default
+of the CLI's ``id-layout`` command. ``IdEncodedView`` builds the
+dictionary and ``id_quads`` in one pass per table:
+``RelationalQuadStore.quads()`` melts each table with a single scan and
+``encode_quads`` interns the four quad positions with one explode, so
+a cold build reads each table once per output instead of once per
+(table, column) branch and per position. Views are memoized per store
+instance and unpersisted when their store is garbage-collected.
 """
 
 from __future__ import annotations
@@ -48,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kineo_spark import algebra as A
 from kineo_spark.model import KIND_LITERAL, PyTerm, TERM_SCHEMA, term_struct
+from kineo_spark.store import store_memo, tie_to_store
 
 _KEY = ["kind", "lex", "dt", "lang"]
 
@@ -122,19 +129,21 @@ def encode_quads(quads_flat: DataFrame, id_fn=None,
     null_d = F.lit(None).cast("double")
     qid = id_fn or (lambda k, l, d, la: _id_expr(k, l, d, la, key_bits))
 
-    def dict_part(kind, lex, dt, lang, num):
-        return q.select(
+    def term(kind, lex, dt, lang, num):
+        return F.struct(
             kind.cast("tinyint").alias("kind"), lex.alias("lex"),
             dt.alias("dt"), lang.alias("lang"), num.alias("num"),
         )
 
-    terms = (
-        dict_part(q["s_kind"], q["s_lex"], null_s, null_s, null_d)
-        .unionByName(dict_part(F.lit(0), q["p_lex"], null_s, null_s, null_d))
-        .unionByName(dict_part(q["o_kind"], q["o_lex"], q["o_dt"], q["o_lang"], q["o_num"]))
-        .unionByName(dict_part(F.lit(0), q["g_lex"], null_s, null_s, null_d))
-        .dropDuplicates(["kind", "lex", "dt", "lang"])
-    )
+    # one pass over the quad source: each quad explodes into its four
+    # position terms (a four-way union would plan — and run — the whole
+    # source four times)
+    terms = q.select(F.explode(F.array(
+        term(q["s_kind"], q["s_lex"], null_s, null_s, null_d),
+        term(F.lit(0), q["p_lex"], null_s, null_s, null_d),
+        term(q["o_kind"], q["o_lex"], q["o_dt"], q["o_lang"], q["o_num"]),
+        term(F.lit(0), q["g_lex"], null_s, null_s, null_d),
+    )).alias("__t")).select("__t.*").dropDuplicates(_KEY)
     k = _key_cols("")
     dictionary = terms.select(qid(k[0], k[1], k[2], k[3]).alias("id"),
                               *_KEY, "num")
@@ -551,8 +560,6 @@ class IdEncodedView:
     parquet layout (SURVEY §1.4: 4×long beats lexical structs as the
     shuffle currency at 100 TB); here they are derived once per store."""
 
-    _CACHE: dict[int, "IdEncodedView"] = {}
-
     # dictionaries at or below this row count broadcast into materialize
     # joins (~100 B/term struct → ~100 MB worst case — a broadcast build
     # is paid PER QUERY, so it must stay cheap); above it, the melt path
@@ -583,10 +590,15 @@ class IdEncodedView:
 
     @classmethod
     def for_store(cls, store, key_bits: int = 64) -> "IdEncodedView":
-        key = (id(store), key_bits)
-        if key not in cls._CACHE:
-            cls._CACHE[key] = cls(store, key_bits=key_bits)
-        return cls._CACHE[key]
+        """The store's view, built on first use and unpersisted when the
+        store is garbage-collected (store.store_memo)."""
+
+        def build() -> "IdEncodedView":
+            view = cls(store, key_bits=key_bits)
+            tie_to_store(store, view.dictionary, view.id_quads)
+            return view
+
+        return store_memo(store, ("IdEncodedView", key_bits), build)
 
     @property
     def str_inline(self) -> bool:

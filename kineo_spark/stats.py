@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from kineo_spark import algebra as A
 from kineo_spark.model import PyTerm
+from kineo_spark.store import store_memo
 
 
 class CharacteristicSets:
@@ -41,8 +42,6 @@ class CharacteristicSets:
     the collect, so above the cap we keep only the top sets by subject
     support (estimation stays useful) and DECLINE the exact count-star
     shortcut entirely (``count_star`` → None, normal plan runs)."""
-
-    _CACHE: dict[int, "CharacteristicSets"] = {}
 
     #: cap on collected (graph, cs, predicate) rows — ~a few MB driver-side
     MAX_COLLECT_ROWS = 100_000
@@ -90,10 +89,9 @@ class CharacteristicSets:
 
     @classmethod
     def for_store(cls, store) -> "CharacteristicSets":
-        key = id(store)
-        if key not in cls._CACHE:
-            cls._CACHE[key] = cls(store)
-        return cls._CACHE[key]
+        """The store's statistics, computed on first use and dropped with
+        the store (store.store_memo; they hold nothing persisted)."""
+        return store_memo(store, "CharacteristicSets", lambda: cls(store))
 
     def count_star(self, preds: list[str], graph_lex: str | None,
                    distinct_subject: bool = False) -> int | None:

@@ -25,12 +25,16 @@ Two implementations:
   this workable at 100 TB. It plays the role of the reference's
   ``PlanningQuadStore`` pushdown hook (QueryPlanner.swift:94-103) and
   SQLite SQL pushdown (SQLiteQuadStore.swift:528-711), with Catalyst as
-  the beneficiary.
+  the beneficiary. The full quad set (``quads()``) instead melts each
+  table in ONE scan, every column of a row exploding at once.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
 from abc import ABC, abstractmethod
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -53,12 +57,60 @@ RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
 def _unpersist_quietly(df: DataFrame) -> None:
-    """weakref.finalize target for per-store cached DataFrames — a
-    stopped SparkContext (session teardown) must not raise from GC."""
+    """Unpersist that tolerates a stopped SparkContext (session
+    teardown) — it runs from GC finalizers, which must not raise."""
     try:
         df.unpersist()
     except Exception:
         pass
+
+
+# live holders per persisted plan. Spark's CacheManager keys cached data
+# by PLAN, not by DataFrame object: two stores over the same quads
+# DataFrame derive equal plans and share one cache entry, so unpersisting
+# for the first store to die would silently uncache the survivor.
+_PERSIST_HOLDERS: Counter = Counter()
+# reentrant: a finalizer may run inside tie_to_store on the same thread
+_HOLDERS_LOCK = threading.RLock()
+
+
+def _release(held: list) -> None:
+    with _HOLDERS_LOCK:
+        for key, df in held:
+            _PERSIST_HOLDERS[key] -= 1
+            if _PERSIST_HOLDERS[key] <= 0:
+                del _PERSIST_HOLDERS[key]
+                _unpersist_quietly(df)
+
+
+def tie_to_store(store, *dfs: DataFrame) -> weakref.finalize:
+    """Unpersist the (already persisted) ``dfs`` when ``store`` is
+    garbage-collected — or when the returned finalizer is called — once
+    no other live store holds an equal plan. Cache lifetime = store
+    lifetime: stores are cheap wrappers re-created on every mutation
+    (update.GraphStore builds a fresh one per Modify and per read), and
+    persisted DISK blocks are not LRU-evicted, so without this an
+    update-heavy session accumulates orphaned cached blocks until the
+    SparkContext stops."""
+    held = [(df.semanticHash(), df) for df in dfs]
+    with _HOLDERS_LOCK:
+        for key, _ in held:
+            _PERSIST_HOLDERS[key] += 1
+    return weakref.finalize(store, _release, held)
+
+
+def store_memo(store, key, build):
+    """Per-store-instance memo for derived state (the ID dictionary
+    view, characteristic sets): ``build()`` runs once per (store, key)
+    and its result lives exactly as long as the store object. Unlike a
+    class-level dict keyed by ``id(store)``, nothing outlives a short-
+    lived store (GraphStore builds one per Modify) and a recycled
+    ``id()`` cannot serve one store's state to another. Builders that
+    persist DataFrames release them with ``tie_to_store``."""
+    memo = store.__dict__.setdefault("_store_memo", {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
 
 
 class QuadStore(ABC):
@@ -104,22 +156,13 @@ class QuadStore(ABC):
         per read), so the memo never serves stale graphs."""
         memo = getattr(self, "_graph_terms_memo", None)
         if memo is None:
-            import weakref
-
             from pyspark import StorageLevel
             memo = self._graph_terms_build().persist(
                 StorageLevel.MEMORY_AND_DISK)
             self._graph_terms_memo = memo
-            # Cache lifetime = store lifetime (ADVICE r11): stores are
-            # cheap wrappers re-created on every mutation (update.
-            # GraphStore builds a fresh one per read), and persisted
-            # DISK blocks are not LRU-evicted — without this an
-            # update-heavy long-lived session accumulates orphaned
-            # cached blocks until the SparkContext stops. The finalizer
-            # unpersists when the store is garbage-collected;
-            # release_cached() does it eagerly.
-            self._graph_terms_finalizer = weakref.finalize(
-                self, _unpersist_quietly, memo)
+            # unpersisted when the store is garbage-collected (ADVICE
+            # r11); release_cached() does it eagerly
+            self._graph_terms_finalizer = tie_to_store(self, memo)
         return memo
 
     def release_cached(self) -> None:
@@ -496,14 +539,18 @@ class RelationalQuadStore(QuadStore):
         for t in tables:
             pks, fks = TABLES[t]
             yield (t, "type", None)
-            for f_ in self.table(t).schema.fields:
-                if f_.name.startswith("__") or isinstance(
-                    f_.dataType, (T.ArrayType, T.MapType, T.StructType)
-                ):
-                    continue
+            for f_ in self._value_fields(t):
                 yield (t, "col", f_.name)
             for c in fks:
                 yield (t, "fk", c)
+
+    def _value_fields(self, table: str) -> list[T.StructField]:
+        """The columns exposed as ``urn:col:`` quads: scalar, non-internal."""
+        return [
+            f_ for f_ in self.table(table).schema.fields
+            if not f_.name.startswith("__") and not isinstance(
+                f_.dataType, (T.ArrayType, T.MapType, T.StructType))
+        ]
 
     def _branch_df(self, pattern: A.QuadPattern, table: str, kind: str, col: str | None):
         df = self.table(table)
@@ -752,13 +799,55 @@ class RelationalQuadStore(QuadStore):
             return self.spark.createDataFrame([], schema)
         return out
 
-    def quads(self) -> DataFrame:
-        pat = A.QuadPattern(A.Var("s"), A.Var("p"), A.Var("o"), A.Var("g"))
-        df = self.scan(pat)
-        return df.select(
-            df["s"]["kind"].alias("s_kind"), df["s"]["lex"].alias("s_lex"),
-            df["p"]["lex"].alias("p_lex"),
-            df["o"]["kind"].alias("o_kind"), df["o"]["lex"].alias("o_lex"),
-            df["o"]["dt"].alias("o_dt"), df["o"]["lang"].alias("o_lang"),
-            df["o"]["num"].alias("o_num"), df["g"]["lex"].alias("g_lex"),
+    def _melt_table(self, table: str) -> DataFrame:
+        """Every quad of one table from ONE parquet scan: each row
+        explodes into its rdf:type, column and FK quads (S2RDF loads a
+        table's vertical partitions in one pass the same way). Each
+        element carries whether its native value is non-NULL; NULL
+        elements are dropped after the explode — the same rows the
+        per-branch ``isNotNull`` filters of ``scan`` keep, with the same
+        non-nullable p/kind columns."""
+        df = self.table(table)
+        _, fks = TABLES[table]
+
+        def quad(p_lex: str, o_term: Column, ok: Column) -> Column:
+            return F.struct(F.lit(p_lex).alias("p_lex"), o_term.alias("o"),
+                            ok.alias("ok"))
+
+        elems = [quad(RDF_TYPE, iri(f"urn:class:{table}").as_column(),
+                      F.lit(True))]
+        for f_ in self._value_fields(table):
+            c = F.col(f_.name)
+            elems.append(quad(
+                f"urn:col:{table}:{f_.name}",
+                term_from_spark_col(c, f_.dataType, nonnull=True),
+                c.isNotNull()))
+        for col, target in fks.items():
+            c = F.col(col)
+            elems.append(quad(
+                f"urn:fk:{table}:{col}",
+                iri_col(F.concat_ws(":", F.lit(f"urn:t:{target}"),
+                                    c.cast("string")), nonnull=True),
+                c.isNotNull()))
+        melted = df.select(self.row_iri(table).alias("s_lex"),
+                           F.explode(F.array(*elems)).alias("__q")) \
+            .filter(F.col("__q.ok"))
+        o = F.col("__q.o")
+        return melted.select(
+            F.lit(KIND_IRI).cast("tinyint").alias("s_kind"), "s_lex",
+            F.col("__q.p_lex").alias("p_lex"),
+            o["kind"].alias("o_kind"), o["lex"].alias("o_lex"),
+            o["dt"].alias("o_dt"), o["lang"].alias("o_lang"),
+            o["num"].alias("o_num"), F.lit(f"urn:g:{table}").alias("g_lex"),
         )
+
+    def quads(self) -> DataFrame:
+        """All quads, one scan per table (``_melt_table``) — not one per
+        (table, column) branch as an unbound ``scan(?s ?p ?o ?g)``
+        would plan, so a full-corpus consumer (the ID dictionary build,
+        characteristic sets, dumps) reads each table once."""
+        parts = [self._melt_table(t) for t in self.table_names]
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
